@@ -27,8 +27,6 @@ if str(REPO) not in sys.path:
 
 from oscar_tools_spark import oracles as O  # noqa: E402
 from oscar_tools_spark.functions.annotations import annotations_expr  # noqa: E402
-from oscar_tools_spark.functions.langid import stopword_hits_expr  # noqa: E402
-from oscar_tools_spark.functions import lexicons as lx  # noqa: E402
 from oscar_tools_spark.functions.textstats import (  # noqa: E402
     bpe_token_count,
     fingerprint_expr,
@@ -41,7 +39,6 @@ from oscar_tools_spark.operators.dedup import (  # noqa: E402
     dedup_lines,
     dedup_minhash_lsh,
     jaccard_pairs,
-    simhash_table,
 )
 from oscar_tools_spark.operators.extract_text import extract_text  # noqa: E402
 from oscar_tools_spark.operators.filter_tags import filter_tags  # noqa: E402
@@ -84,60 +81,6 @@ def _annotated(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------------------------ queries
 
 
-def q_annotate(spark, sf_dir):
-    return (
-        _annotated(spark, sf_dir)
-        .select(
-            "doc_id",
-            F.concat_ws(",", F.col("annotations")).alias("annotations_str"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-def _q_filter(include=(), exclude=(), clean=False):
-    def run(spark, sf_dir):
-        return (
-            filter_tags(_annotated(spark, sf_dir), include, exclude, clean)
-            .select("doc_id", "lang")
-            .orderBy("doc_id")
-        )
-
-    return run
-
-
-def q_scrub(spark, sf_dir):
-    df = _docs(spark, sf_dir)
-    return df.select(
-        "doc_id",
-        scrubbed_expr(F.col("text")).alias("scrubbed"),
-        F.concat_ws(",", rule_hits_expr(F.col("text"))).alias("rule_hits_str"),
-    ).orderBy("doc_id")
-
-
-def q_extract_text(spark, sf_dir):
-    return (
-        extract_text(_docs(spark, sf_dir).select("doc_id", "text"))
-        .select("doc_id", "v1_text")
-        .orderBy("doc_id")
-    )
-
-
-def q_dedup_lines(spark, sf_dir):
-    out = dedup_lines(_docs(spark, sf_dir), ["doc_id"])
-    return out.select(
-        "doc_id", F.col("line_idx").cast("bigint").alias("line_idx"), "line"
-    ).orderBy("doc_id", "line_idx")
-
-
-def q_dedup_docs_exact(spark, sf_dir):
-    return (
-        dedup_docs_exact(_docs(spark, sf_dir), ["doc_id"])
-        .select("doc_id")
-        .orderBy("doc_id")
-    )
-
-
 def q_remove_boilerplate(spark, sf_dir):
     """Corpus-frequency boilerplate line removal over synthetic
     multi-line docs: a universal footer line must vanish from every
@@ -160,20 +103,6 @@ def q_remove_boilerplate(spark, sf_dir):
         remove_boilerplate_lines(synth, ["doc_id"], max_doc_count=2)
         .select("doc_id", "text", "n_lines_removed")
         .orderBy("doc_id")
-    )
-
-
-def q_dedup_incremental(spark, sf_dir):
-    """Exact incremental dedup: docs with doc_id % 5 == 0 play the
-    existing corpus — participating ONLY through its digest table, as
-    a 100 TB history would — and the rest are the new batch."""
-    from oscar_tools_spark.operators.dedup import corpus_digests, dedup_incremental
-
-    docs = _docs(spark, sf_dir)
-    seen = corpus_digests(docs.filter(F.col("doc_id") % 5 == 0))
-    batch = docs.filter(F.col("doc_id") % 5 != 0)
-    return (
-        dedup_incremental(batch, seen, ["doc_id"]).select("doc_id").orderBy("doc_id")
     )
 
 
@@ -219,34 +148,6 @@ def q_dedup_convs_incremental(spark, sf_dir):
         dedup_conversations_incremental(batch, seen)
         .select("conv_id", "doc_id")
         .orderBy("conv_id", "doc_id")
-    )
-
-
-def q_url_blocklist(spark, sf_dir):
-    """UT1-style domain blocklist annotation over deterministic
-    synthetic URLs (the testdata has no URL column; the operator is
-    exercised on real warc-style URLs in tests/test_quality_filters)."""
-    from oscar_tools_spark.operators.urlblock import annotate_url_blocklist
-
-    docs = _docs(spark, sf_dir)
-    u = docs.select(
-        "doc_id",
-        F.concat(
-            F.lit("https://w"),
-            (F.col("doc_id") % 3).cast("string"),
-            F.lit("."),
-            F.col("source"),
-            F.lit(".example."),
-            F.when(F.col("doc_id") % 2 == 0, F.lit("com")).otherwise(F.lit("org")),
-            F.lit("/p/"),
-            F.col("doc_id").cast("string"),
-        ).alias("url"),
-    )
-    bl = spark.createDataFrame([(d,) for d in O.URL_BLOCKLIST], "domain string")
-    return (
-        annotate_url_blocklist(u, bl, ["doc_id"])
-        .select("doc_id", "url_blocked")
-        .orderBy("doc_id")
     )
 
 
@@ -337,32 +238,6 @@ def q_url_pipeline(spark, sf_dir):
     )
 
 
-def q_quality_prob(spark, sf_dir):
-    """CCNet/GPT-3-style hashed-logit quality scores. Trained on a
-    deterministic split (pos = doc_id%7==0, neg = %7==1) — rows-only
-    like the other trained-model scorers (float sigmoid outputs);
-    separation/determinism/swap-seam invariants are pytest-gated in
-    tests/test_quality_filters.py."""
-    from oscar_tools_spark.functions.quality_classifier import (
-        score_quality,
-        train_quality_classifier,
-    )
-
-    docs = _docs(spark, sf_dir)
-    model = train_quality_classifier(
-        docs.filter(F.col("doc_id") % 7 == 0),
-        docs.filter(F.col("doc_id") % 7 == 1),
-        dim=2**14,
-        sample_cap=2000,
-        epochs=50,
-    )
-    return (
-        score_quality(docs, model)
-        .select("doc_id", F.round("quality_prob", 6).alias("quality_prob"))
-        .orderBy("doc_id")
-    )
-
-
 def q_validate_transcripts(spark, sf_dir):
     """Input-contract validation over pseudo-conversations with
     deterministically planted anomalies: duplicated (conv, turn)
@@ -411,43 +286,6 @@ def q_conversation_profile(spark, sf_dir):
     )
 
 
-def q_assign_split(spark, sf_dir):
-    """Deterministic 98/1/1 train/val/test assignment — hash-stable
-    under corpus growth (new docs never move old docs across splits)."""
-    from oscar_tools_spark.operators.sampling import assign_split
-
-    return (
-        assign_split(_docs(spark, sf_dir), ["doc_id"])
-        .select("doc_id", "split")
-        .orderBy("doc_id")
-    )
-
-
-def q_canonical_url(spark, sf_dir):
-    """URL canonicalization: five cosmetic variants per page (www.,
-    #fragment, :443, trailing ?, bare) all normalize to one dedup key."""
-    from oscar_tools_spark.operators.urlblock import canonical_url_expr
-
-    docs = _docs(spark, sf_dir)
-    host = F.concat(
-        F.lit("example"), (F.col("doc_id") % 20).cast("string"), F.lit(".com")
-    )
-    path = F.concat(F.lit("/p/"), F.col("doc_id").cast("string"))
-    m = F.col("doc_id") % 5
-    url = (
-        F.when(m == 0, F.concat(F.lit("https://www."), host, path, F.lit("/")))
-        .when(m == 1, F.concat(F.lit("https://"), host, path, F.lit("#frag")))
-        .when(m == 2, F.concat(F.lit("https://"), host, F.lit(":443"), path))
-        .when(m == 3, F.concat(F.lit("https://"), host, path, F.lit("?")))
-        .otherwise(F.concat(F.lit("https://"), host, path))
-    )
-    return (
-        docs.select("doc_id", url.alias("url"))
-        .select("doc_id", canonical_url_expr(F.col("url")).alias("url_canonical"))
-        .orderBy("doc_id")
-    )
-
-
 def q_sample_budget(spark, sf_dir):
     return (
         sample_by_budget(
@@ -485,67 +323,6 @@ def q_langid(spark, sf_dir):
         _ident_from_hits(F.col("_h")).getField("label").alias("label"),
         F.array_max(F.col("_h")).cast("bigint").alias("hits"),
     ).orderBy("doc_id")
-
-
-def q_token_stats(spark, sf_dir):
-    df = _docs(spark, sf_dir)
-    t = F.col("text")
-    return df.select(
-        "doc_id",
-        ws_token_count(t).cast("bigint").alias("ws_tokens"),
-        bpe_token_count(t).cast("bigint").alias("bpe_tokens"),
-        stopword_count(t).cast("bigint").alias("stop_hits"),
-    ).orderBy("doc_id")
-
-
-def q_quality_score(spark, sf_dir):
-    df = _docs(spark, sf_dir)
-    return df.select(
-        "doc_id", quality_score_expr(F.col("text")).alias("quality")
-    ).orderBy("doc_id")
-
-
-def q_quantile_buckets(spark, sf_dir):
-    """CCNet-style per-language quality terciles (exact ntile mode —
-    the approx percentile-sketch mode is the 100 TB path, equivalence
-    pytest-gated in tests/test_components_stats.py)."""
-    from oscar_tools_spark.operators.stats import quantile_buckets
-
-    scored = _docs(spark, sf_dir).select(
-        "doc_id", "lang", quality_score_expr(F.col("text")).alias("quality")
-    )
-    return (
-        quantile_buckets(
-            scored, "lang", "quality", mode="exact", order_cols=("doc_id",)
-        )
-        .select("doc_id", "lang", "quality", "bucket")
-        .orderBy("doc_id")
-    )
-
-
-def q_fingerprint(spark, sf_dir):
-    df = _docs(spark, sf_dir)
-    return df.select("doc_id", fingerprint_expr(F.col("text")).alias("fp")).orderBy(
-        "doc_id"
-    )
-
-
-def q_minhash_dedup(spark, sf_dir):
-    return (
-        dedup_minhash_lsh(_docs(spark, sf_dir), "doc_id")
-        .select("doc_id")
-        .orderBy("doc_id")
-    )
-
-
-def q_simhash(spark, sf_dir):
-    return simhash_table(_docs(spark, sf_dir), ["doc_id"]).orderBy("doc_id")
-
-
-def q_jaccard_pairs(spark, sf_dir):
-    return jaccard_pairs(_docs(spark, sf_dir), "doc_id", threshold=0.5).orderBy(
-        "key_a", "key_b"
-    )
 
 
 def q_update_lang_codes(spark, sf_dir):
@@ -845,8 +622,9 @@ def q_repetition_stats(spark, sf_dir):
     groupBy(doc_id, line) -> regroup -> join (two corpus-line
     Exchanges + a join that re-shuffles every doc) collapses into one
     fold over array_sort(split(text)). The inner join dropped
-    null-text docs (explode of a null array emits nothing); the
-    explicit isNotNull filter preserves that. Heavy expressions sit
+    null-text docs (explode of a null array emits nothing) and
+    null-doc_id docs (a NULL key joins nothing); the explicit
+    isNotNull filters preserve both. Heavy expressions sit
     ABOVE the narrow (doc_id, text) sort so the range-sampling pass
     never runs them (the r5/r8 curation_pipeline lesson). Verified
     value- AND order-identical to the join shape at sf0.1
@@ -877,7 +655,7 @@ def q_repetition_stats(spark, sf_dir):
         lambda acc: acc.getField("best"),
     )
     return (
-        df.filter(F.col("text").isNotNull())
+        df.filter(F.col("text").isNotNull() & F.col("doc_id").isNotNull())
         .select("doc_id", "text")
         .orderBy("doc_id")
         .select(
@@ -1046,16 +824,6 @@ def q_topk_per_lang(spark, sf_dir, k: int = 3):
     )
 
 
-def q_doc_embedding_join(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return (
-        d.join(F.broadcast(e), d.doc_id == e.vec_id)
-        .select("doc_id", "lang", F.col("label").cast("bigint").alias("label"))
-        .orderBy("doc_id")
-    )
-
-
 _PLANT_OFFSET_OK: set[str] = set()
 
 
@@ -1161,18 +929,6 @@ def q_media_features(spark, sf_dir):
     ).orderBy("media_id")
 
 
-def q_langid_model(spark, sf_dir):
-    """Model-UDF language ID (rows-only check: the trigram model is not
-    expressible in SQL)."""
-    from oscar_tools_spark.functions.langid import identify
-
-    return (
-        identify(_docs(spark, sf_dir))
-        .select("doc_id", F.col("identification.label").alias("label"))
-        .orderBy("doc_id")
-    )
-
-
 def q_simhash_hamming_dedup(spark, sf_dir):
     """Hamming-band simhash dedup WITH the survivors' signatures: one
     hash checks both the 32-bit per-bit-majority signature values and
@@ -1273,18 +1029,6 @@ def q_sentence_ids(spark, sf_dir):
         F.col("line_idx").cast("bigint").alias("line_idx"),
         F.coalesce(F.col("_ident.label"), F.lit("<none>")).alias("label"),
     ).orderBy("doc_id", "line_idx")
-
-
-def q_perplexity(spark, sf_dir):
-    """Char-bigram LM perplexity (rows-only check: the trained log-prob
-    matrix is not SQL-expressible). Rounded per row for stability."""
-    from oscar_tools_spark.functions.perplexity import perplexity_udf
-
-    return (
-        _docs(spark, sf_dir)
-        .select("doc_id", F.round(perplexity_udf()(F.col("text")), 4).alias("ppl"))
-        .orderBy("doc_id")
-    )
 
 
 def q_curation_pipeline(spark, sf_dir):
@@ -1467,7 +1211,7 @@ def q_sample_budget_modes(spark, sf_dir):
 
 def q_topk_per_lang_embedded(spark, sf_dir):
     """Window top-k per language + broadcast equi-join to embeddings in
-    one query (merges topk_per_lang + doc_embedding_join)."""
+    one query (the documents x embeddings join is folded in here)."""
     t = q_topk_per_lang(spark, sf_dir)
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return (
@@ -2037,11 +1781,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Registry ORDER is part of the driver contract: the CORRECTNESS
     gate hashes the FIRST 50 entries, so never-checked / newest /
     recently-changed queries lead and the stable singles follow.
-    Exactly 50 entries — every operator family driver-checked; the
-    per-variant q_* functions merged away (filter truth table,
-    textstats, scorers, ANN variants, sample/substring modes,
-    canonical+blocklist URL, events hourly/sessionize, vocab/tfidf)
-    remain as bench/pytest surfaces."""
+    Exactly 50 entries — every operator family driver-checked. A q_*
+    function not listed here is either a section that a registered
+    query composes (sample/substring modes, ANN variants, events
+    hourly/sessionize, vocab/tfidf, ...) or a leaf that bench.py /
+    bench_extra.py calls by name; tests/test_entry_contract.py fails
+    on any q_* that is neither."""
     return {
         # -- never driver-checked before r5, newest, or changed this round
         "chat_template": q_chat_template,

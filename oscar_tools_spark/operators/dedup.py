@@ -759,33 +759,12 @@ def dedup_conversations_incremental(
         "digest",
         "left_anti",
     )
-    return _keep_digest_winners(df, fresh, conv_col)
-
-
-def _keep_digest_winners(df: DataFrame, digs: DataFrame, conv_col: str) -> DataFrame:
-    """ONE definition of the conversation-dedup winner rule (smallest
-    ``conv_col`` per digest, semi-join back to intact turn rows) —
-    shared by the full-corpus and incremental paths so a tie-break
-    change can never diverge them (their survivors must compose)."""
+    # smallest conv_col per unseen digest wins; the semi-join brings
+    # back its turn rows intact
     winner = (
-        digs.groupBy("digest").agg(F.min(conv_col).alias(conv_col)).select(conv_col)
+        fresh.groupBy("digest").agg(F.min(conv_col).alias(conv_col)).select(conv_col)
     )
     return df.join(winner, conv_col, "left_semi")
-
-
-def dedup_conversations(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    order_cols: tuple[str, ...] = ("turn_idx",),
-    text_col: str = "text",
-) -> DataFrame:
-    """Full-corpus exact dedup at CONVERSATION granularity: keep the
-    smallest ``conv_col`` per full-text digest, conversations intact
-    (the no-history twin of :func:`dedup_conversations_incremental` —
-    same digest scheme and winner rule, so its survivors compose with
-    incremental state from :func:`conversation_digests`)."""
-    digs = conversation_digests(df, conv_col, order_cols, text_col)
-    return _keep_digest_winners(df, digs, conv_col)
 
 
 def dedup_incremental_minhash(
@@ -880,8 +859,9 @@ def simhash_table(
         # int64 packing). Widen the substring before widening bits.
         raise ValueError(f"bits must be in [1, 32], got {bits}")
     # coalesce: a null-text doc must still emit a signature row (a NULL
-    # word list -> explode drops the doc -> the inner join in
-    # dedup_simhash would erase it). Null hashes like the empty doc:
+    # word list -> explode drops the doc -> it gets no band rows, so
+    # dedup_simhash_hamming never matches it against its duplicates and
+    # keep_signature returns a NULL simhash). Null hashes like the empty doc:
     # the no-words case keeps one '' token, preserving the old
     # split('') = [''] behavior. Word extraction replaces the
     # regexp_replace char-class chain (~90x slower at transcripts
@@ -910,15 +890,6 @@ def simhash_table(
     for b in range(bits):
         out = out + F.when(F.col(f"v_{b}") > 0, F.lit(1 << b)).otherwise(0).cast("bigint")
     return votes.select(*key_cols, out.alias("simhash"))
-
-
-def dedup_simhash(df: DataFrame, key_col: str, text_col: str = "text") -> DataFrame:
-    """Exact-simhash-collision dedup (hamming distance 0), lowest key wins.
-    Banded hamming<=k matching is the scale-out extension (join on
-    16-bit chunks); collision-only is the conservative default."""
-    keyed = df.join(simhash_table(df, [key_col], text_col), key_col)
-    winner = keyed.groupBy("simhash").agg(F.min(key_col).alias(key_col))
-    return keyed.join(winner, ["simhash", key_col], "left_semi").drop("simhash")
 
 
 # ------------------------------------------------- long-gram substring dedup
@@ -1260,8 +1231,8 @@ def jaccard_pairs(
     NOTE: calling this function EAGERLY RUNS a Spark job (the shingle
     frame is materialized via ``plans.materialize`` so its three
     consumers don't recompute the explode) — plan construction is not
-    lazy here. The same applies to ``dedup_jaccard`` and
-    ``connected_components``, which build on it.
+    lazy here. The same applies to ``connected_components`` and
+    ``dedup_components`` (operators/components.py) over its pairs.
     """
     from ..plans.materialize import materialize
 
@@ -1313,59 +1284,7 @@ def jaccard_pairs(
     )
 
 
-def dedup_jaccard(
-    df: DataFrame,
-    key_col: str,
-    text_col: str = "text",
-    shingle_k: int = 3,
-    threshold: float = 0.8,
-    max_shingle_df: int | None = None,
-) -> DataFrame:
-    """Exact n-gram-Jaccard dedup, lowest key wins. The small-scale
-    helper: the DF cap defaults OFF here (the d² blowup it guards
-    against needs web-scale shingle frequencies); pass ``max_shingle_df``
-    explicitly to opt in to the approximate capped semantics."""
-    pairs = jaccard_pairs(df, key_col, text_col, shingle_k, threshold, max_shingle_df)
-    dup_keys = pairs.select(F.col("key_b").alias(key_col)).distinct()
-    return df.join(dup_keys, key_col, "left_anti")
-
-
 # ------------------------------------------------------- embedding near-dup
-
-
-def dedup_embedding_cosine(
-    df: DataFrame,
-    key_col: str,
-    vec_col: str = "embedding",
-    threshold: float = 0.995,
-    n_buckets_probe: int | None = None,
-) -> DataFrame:
-    """Embedding near-dup: drop rows whose cosine similarity to a
-    lower-keyed row exceeds ``threshold``.
-
-    Brute-force O(n²) pair join — correct baseline; the LSH-bucketed
-    variant in operators/similarity.py is the 100 TB path (bucket by
-    random-hyperplane signs, join within buckets only).
-    """
-    dot = lambda x, y: F.aggregate(  # noqa: E731
-        F.zip_with(x, y, lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    norm = lambda x: F.sqrt(dot(x, x))  # noqa: E731
-    v = df.select(F.col(key_col).alias("k"), F.col(vec_col).alias("v"))
-    a, b = v.alias("a"), v.alias("b")
-    pairs = a.join(b, F.col("a.k") > F.col("b.k")).select(
-        F.col("a.k").alias("key_a"),
-        (
-            dot(F.col("a.v"), F.col("b.v"))
-            / (norm(F.col("a.v")) * norm(F.col("b.v")))
-        ).alias("cos"),
-    )
-    dup = pairs.filter(F.col("cos") >= threshold).select(
-        F.col("key_a").alias(key_col)
-    ).distinct()
-    return df.join(dup, key_col, "left_anti")
 
 
 def dedup_embedding_lsh(
@@ -1380,8 +1299,9 @@ def dedup_embedding_lsh(
 ) -> DataFrame:
     """Scale path for embedding near-dup: banded random-hyperplane LSH
     candidate generation + exact cosine verification, greedy
-    lowest-key-wins — same policy as ``dedup_embedding_cosine`` but with
-    bucketed equi-joins instead of the O(n²) all-pairs product.
+    lowest-key-wins — the policy of a brute-force all-pairs cosine join
+    (the reference in tests/test_textstats_similarity.py), but with
+    bucketed equi-joins instead of the O(n²) product.
 
     Band geometry (why 16-bit bands, not 4-bit + hamming probes): a
     plane agrees on a pair at angle θ with probability s = 1 - θ/π.

@@ -27,16 +27,20 @@ def _dot(x: Column, y: Column) -> Column:
     )
 
 
-def cosine_expr(x: Column, y: Column, dim: int | None = None) -> Column:
-    """Cosine as a column expression (interpreted HOF fold). ``dim`` is
-    accepted for signature compatibility and ignored: an r8 experiment
-    unrolled the fold into a flat 3*dim-term codegen expression and it
-    measured 2-4x SLOWER across every consumer (the giant expression
-    tree blows past the codegen method-size limits and falls back to
-    interpretation with no CSE across the repeated gets). For
+def cosine_expr(x: Column, y: Column) -> Column:
+    """Cosine as a column expression (interpreted HOF fold). Not
+    unrolled: an r8 experiment unrolled the fold into a flat
+    3*dim-term codegen expression and it measured 2-4x SLOWER across
+    every consumer (the giant expression tree blows past the codegen
+    method-size limits and falls back to interpretation with no CSE
+    across the repeated gets). For
     many-candidate verification use :func:`cosine_pairs_udf` instead —
-    bit-identical values, vectorized across the batch."""
-    return _dot(x, y) / (F.sqrt(_dot(x, x)) * F.sqrt(_dot(y, y)))
+    bit-identical values, vectorized across the batch.
+
+    NULL when either vector has zero norm (``try_divide``: a plain
+    ``/`` raises DIVIDE_BY_ZERO under ANSI mode, so one all-zero
+    embedding would abort the whole query)."""
+    return F.try_divide(_dot(x, y), F.sqrt(_dot(x, x)) * F.sqrt(_dot(y, y)))
 
 
 def cosine_pairs_udf():
@@ -50,10 +54,11 @@ def cosine_pairs_udf():
     over dimensions in index order on float64 (acc = 0.0; acc +=
     x_i * y_i), exactly the zip_with/aggregate sequential fold with its
     per-element double casts, and the final expression keeps the same
-    dot / (sqrt(xx) * sqrt(yy)) order. NULL/ragged-length inputs yield
-    NaN (the expression form yields NULL; both fail a >= threshold
-    filter identically — do not use this variant in ordering contexts,
-    where Spark sorts NaN above every double but NULL last)."""
+    dot / (sqrt(xx) * sqrt(yy)) order. NULL, ragged-length and
+    zero-norm inputs compute NaN here, and Spark's Arrow serializer
+    masks NaN to NULL on the way out (it passes ``series.isnull()`` as
+    the validity mask), so the column carries NULL exactly where the
+    expression form does."""
 
     @F.pandas_udf("double")
     def _cos(xs: pd.Series, ys: pd.Series) -> pd.Series:

@@ -901,15 +901,6 @@ order by lang, doc_id
 """
 
 
-def q_doc_embedding_join() -> str:
-    """documents x embeddings equi-join (broadcast on the Spark side)."""
-    return """
-select d.doc_id, d.lang, cast(e.label as bigint) as label
-from documents d join embeddings e on d.doc_id = e.vec_id
-order by d.doc_id
-"""
-
-
 def q_simhash_hamming_dedup(bits: int = 32, chunks: int = 4) -> str:
     """Survivors of hamming-band simhash dedup (mirrors
     dedup_simhash_hamming): band join on bit chunks, exact hamming via
@@ -1776,7 +1767,7 @@ order by a.doc_id
 
 def q_topk_per_lang_embedded(k: int = 3) -> str:
     """Window top-k per language + broadcast equi-join to embeddings in
-    one query (merges q_topk_per_lang + q_doc_embedding_join)."""
+    one query (the documents x embeddings join is folded in here)."""
     return f"""
 select t.lang, t.doc_id, t.n_chars, cast(e.label as bigint) as label
 from {_sub(q_topk_per_lang(k))} t

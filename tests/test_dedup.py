@@ -4,12 +4,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from oscar_tools_spark.operators.components import dedup_components
 from oscar_tools_spark.operators.dedup import (
     dedup_docs_exact,
-    dedup_jaccard,
     dedup_lines,
     dedup_minhash_lsh,
-    dedup_simhash,
+    dedup_simhash_hamming,
     jaccard_pairs,
     word_shingles_expr,
 )
@@ -224,7 +224,8 @@ def test_jaccard_pairs_and_dedup(spark):
     pairs = jaccard_pairs(df, "doc_id", threshold=0.5).collect()
     assert [(p.key_a, p.key_b) for p in pairs] == [(1, 2)]
     assert 0.5 <= pairs[0].jaccard < 1.0
-    kept = sorted(r.doc_id for r in dedup_jaccard(df, "doc_id", threshold=0.5).collect())
+    exact = jaccard_pairs(df, "doc_id", threshold=0.5, max_shingle_df=None)
+    kept = sorted(r.doc_id for r in dedup_components(df, exact, "doc_id").collect())
     assert kept == [1, 3, 4]
 
 
@@ -233,7 +234,10 @@ def test_simhash_exact_collision_dedup(spark):
         [(1, "identical words here"), (2, "identical words here"), (3, "something else")],
         "doc_id long, text string",
     )
-    kept = sorted(r.doc_id for r in dedup_simhash(df, "doc_id").collect())
+    # one band: hamming < 1 is exact signature equality
+    kept = sorted(
+        r.doc_id for r in dedup_simhash_hamming(df, "doc_id", chunks=1).collect()
+    )
     assert kept == [1, 3]
 
 
@@ -257,13 +261,16 @@ def test_remove_boilerplate_null_text_not_erased(spark):
 
 def test_simhash_null_text_not_erased(spark):
     """Null-text docs get a signature row (null ≡ empty doc) instead of
-    vanishing through the inner join: the smallest-key null/empty doc
+    vanishing from the band join: the smallest-key null/empty doc
     survives, later ones dedupe against it."""
     df = spark.createDataFrame(
         [(1, "real words"), (2, None), (3, ""), (4, None)],
         "doc_id long, text string",
     )
-    kept = sorted(r.doc_id for r in dedup_simhash(df, "doc_id").collect())
+    # one band: hamming < 1 is exact signature equality
+    kept = sorted(
+        r.doc_id for r in dedup_simhash_hamming(df, "doc_id", chunks=1).collect()
+    )
     assert kept == [1, 2]
 
 
@@ -699,7 +706,7 @@ def test_dedup_conversations_full_corpus(spark):
     to the smallest conv_id, turn-structure distinctions survive
     (["a","b"] != ["a\\nb"]), and conversations stay intact."""
     from oscar_tools_spark.operators.dedup import (
-        dedup_conversations,
+        conversation_digests,
         dedup_conversations_incremental,
     )
 
@@ -711,17 +718,11 @@ def test_dedup_conversations_full_corpus(spark):
         (5, 0, None), (5, 1, "x"),     # dup of conv 4 (null == null text)
     ]
     df = spark.createDataFrame(rows, "conv_id bigint, turn_idx int, text string")
-    out = dedup_conversations(df)
+    # full-corpus dedup is the incremental path with empty history
+    out = dedup_conversations_incremental(df, conversation_digests(df.limit(0)))
     got = sorted({r.conv_id for r in out.collect()})
     assert got == [1, 3, 4]
     assert out.filter("conv_id = 1").count() == 2  # intact
-    # composes with the incremental path: empty-history incremental
-    # dedup gives the same survivors
-    from oscar_tools_spark.operators.dedup import conversation_digests
-
-    empty_state = conversation_digests(df.limit(0))
-    inc = dedup_conversations_incremental(df, empty_state)
-    assert sorted({r.conv_id for r in inc.collect()}) == got
 
 
 def test_bloom_state_superset_and_fpr(spark):

@@ -60,6 +60,40 @@ def test_every_query_has_callable_and_oracle_alignment():
     assert len(order) <= 50, order[50:]
 
 
+def test_every_driver_function_is_reachable():
+    """Static, no Spark: every module-level function in __spark_entry__
+    (q_* queries and their private helpers) must be reachable from a
+    root — a value of queries(), entry/queries/oracle_sql themselves,
+    or a name called as ``E.<name>`` from bench.py, bench_extra.py or
+    tests/ — directly or through the functions those roots call. An
+    unreachable q_* is a query no gate, bench or test ever runs."""
+    import ast
+    import re
+    from pathlib import Path
+
+    repo = Path(E.__file__).resolve().parent
+    tree = ast.parse((repo / "__spark_entry__.py").read_text())
+    defs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+    roots = {fn.__name__ for fn in E.queries().values()}
+    roots |= {"entry", "queries", "oracle_sql"}
+    callers = [repo / "bench.py", repo / "bench_extra.py"]
+    for path in callers + sorted((repo / "tests").glob("*.py")):
+        roots |= set(re.findall(r"\bE\.(\w+)", path.read_text()))
+    reached: set[str] = set()
+    todo = [name for name in roots if name in defs]
+    while todo:
+        name = todo.pop()
+        if name not in reached:
+            reached.add(name)
+            todo += [
+                n.id
+                for n in ast.walk(defs[name])
+                if isinstance(n, ast.Name) and n.id in defs
+            ]
+    unreachable = sorted(set(defs) - reached)
+    assert not unreachable, f"dead driver functions: {unreachable}"
+
+
 def test_no_complex_output_columns(spark):
     """Driver-sortability contract: the driver's correctness harness
     sorts the RAW pandas frame before hashing, and pandas cannot
@@ -156,3 +190,18 @@ def test_repetition_stats_inrow_fold_matches_join_shape(spark, tmp_path):
     # plan string repeats it in the initial-plan section)
     assert "hashpartitioning" not in plan
     assert "rangepartitioning" in plan
+
+
+def test_repetition_stats_drops_null_doc_id(spark, tmp_path):
+    """A null-doc_id row is dropped, as the DuckDB oracle's
+    ``join ... using (doc_id)`` drops it."""
+    from oscar_tools_spark import oracles as O
+
+    docs = f"{tmp_path}/documents.parquet"
+    spark.createDataFrame([(None, "a\na")], "doc_id bigint, text string").write.parquet(
+        docs
+    )
+    assert E.q_repetition_stats(spark, str(tmp_path)).collect() == []
+    con = duckdb.connect()
+    con.sql(f"create view documents as from read_parquet('{docs}/*.parquet')")
+    assert con.sql(O.q_repetition_stats()).fetchall() == []

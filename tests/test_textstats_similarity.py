@@ -13,9 +13,37 @@ from oscar_tools_spark.functions.textstats import (
 from oscar_tools_spark.operators.lang_codes import update_lang_codes
 from oscar_tools_spark.operators.similarity import (
     bucket_embeddings,
+    cosine_expr,
+    cosine_pairs_udf,
     topk_cosine,
     topk_cosine_lsh,
 )
+
+
+def brute_force_cosine_dedup(df, key_col, vec_col="embedding", threshold=0.995):
+    """Reference embedding near-dup: drop rows whose cosine similarity
+    to a lower-keyed row reaches ``threshold``, via an O(n²) all-pairs
+    join. The scale paths (dedup_embedding_lsh, semdedup) must keep
+    the same survivors."""
+    dot = lambda x, y: F.aggregate(  # noqa: E731
+        F.zip_with(x, y, lambda a, b: a.cast("double") * b.cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+    norm = lambda x: F.sqrt(dot(x, x))  # noqa: E731
+    v = df.select(F.col(key_col).alias("k"), F.col(vec_col).alias("v"))
+    a, b = v.alias("a"), v.alias("b")
+    pairs = a.join(b, F.col("a.k") > F.col("b.k")).select(
+        F.col("a.k").alias("key_a"),
+        (
+            dot(F.col("a.v"), F.col("b.v"))
+            / (norm(F.col("a.v")) * norm(F.col("b.v")))
+        ).alias("cos"),
+    )
+    dup = pairs.filter(F.col("cos") >= threshold).select(
+        F.col("key_a").alias(key_col)
+    ).distinct()
+    return df.join(dup, key_col, "left_anti")
 
 
 def test_token_counts(spark):
@@ -93,8 +121,6 @@ def test_lsh_topk_agrees_reasonably_with_exact(spark, sf_dir):
 
 
 def test_dedup_embedding_cosine_drops_near_identical(spark):
-    from oscar_tools_spark.operators.dedup import dedup_embedding_cosine
-
     base = [1.0, 0.5, -0.3, 0.8]
     near = [1.0001, 0.5001, -0.3001, 0.8001]  # cosine ~ 1.0
     far = [-1.0, 0.4, 0.9, -0.2]
@@ -102,7 +128,7 @@ def test_dedup_embedding_cosine_drops_near_identical(spark):
         [(1, base), (2, near), (3, far)], "vec_id long, embedding array<float>"
     )
     kept = sorted(
-        r.vec_id for r in dedup_embedding_cosine(df, "vec_id", threshold=0.999).collect()
+        r.vec_id for r in brute_force_cosine_dedup(df, "vec_id", threshold=0.999).collect()
     )
     assert kept == [1, 3]
 
@@ -134,14 +160,11 @@ def _clustered_embeddings(spark, n_clusters=40, dup_every=3, dim=16):
 def test_dedup_embedding_lsh_matches_brute_force(spark):
     """The banded-LSH path must keep the same survivor set as the
     O(n²) brute-force baseline (VERDICT r1 item 1)."""
-    from oscar_tools_spark.operators.dedup import (
-        dedup_embedding_cosine,
-        dedup_embedding_lsh,
-    )
+    from oscar_tools_spark.operators.dedup import dedup_embedding_lsh
 
     df, dim = _clustered_embeddings(spark)
     brute = sorted(
-        r.vec_id for r in dedup_embedding_cosine(df, "vec_id", threshold=0.98).collect()
+        r.vec_id for r in brute_force_cosine_dedup(df, "vec_id", threshold=0.98).collect()
     )
     lsh = sorted(
         r.vec_id
@@ -172,15 +195,12 @@ def test_semdedup_brute_force_equivalence_and_clusters(spark):
     intended multi-cluster setting the planted tiny-perturbation twins
     (cos ~0.9999, far inside any sane cell) must still be dropped and
     the plan must stay cartesian-free."""
-    from oscar_tools_spark.operators.dedup import (
-        dedup_embedding_cosine,
-        semdedup,
-    )
+    from oscar_tools_spark.operators.dedup import semdedup
 
     df, dim = _clustered_embeddings(spark)
     brute = sorted(
         r.vec_id
-        for r in dedup_embedding_cosine(df, "vec_id", threshold=0.98).collect()
+        for r in brute_force_cosine_dedup(df, "vec_id", threshold=0.98).collect()
     )
     one_cell = sorted(
         r.vec_id
@@ -304,3 +324,32 @@ def test_translate_counts_match_regex_strips(spark):
             assert r.an  # null text -> null count, same as regex path
         else:
             assert r.a and r.p
+
+
+def test_cosine_expr_and_udf_agree_on_edge_rows(spark):
+    """cosine_expr and cosine_pairs_udf give the same value on valid
+    rows and NULL on ragged, null and zero-norm rows (a plain division
+    raises DIVIDE_BY_ZERO on a zero vector under ANSI mode), so a
+    >= threshold filter keeps the same rows through either."""
+    rows = [
+        (1, [1.0, 2.0], [2.0, 4.1]),  # valid, ~1.0
+        (2, [1.0, 0.0], [0.0, 1.0]),  # valid, 0.0
+        (3, [1.0, 2.0], [1.0, 2.0, 3.0]),  # ragged
+        (4, None, [1.0, 2.0]),  # null vector
+        (5, [0.0, 0.0], [1.0, 2.0]),  # zero norm
+        (6, [0.0, 0.0], [0.0, 0.0]),  # both zero
+    ]
+    df = spark.createDataFrame(rows, "id int, x array<double>, y array<double>")
+    scored = df.select(
+        "id",
+        cosine_expr(F.col("x"), F.col("y")).alias("e"),
+        cosine_pairs_udf()(F.col("x"), F.col("y")).alias("u"),
+    )
+    got = {r.id: (r.e, r.u) for r in scored.collect()}
+    assert got[2] == (0.0, 0.0)
+    assert got[1][0] == got[1][1] and got[1][0] > 0.99
+    for i in (3, 4, 5, 6):
+        assert got[i] == (None, None), (i, got[i])
+    for col in ("e", "u"):
+        kept = sorted(r.id for r in scored.filter(F.col(col) >= 0.5).collect())
+        assert kept == [1], col
